@@ -2,6 +2,7 @@ package graft
 
 import graft.ann.Ann
 import graft.core.DedupConfig
+import graft.core.SessionConf._
 import graft.corpus.CorpusGen
 import graft.dedup.DedupPipeline
 import graft.functions.GraftFunctions._
@@ -42,21 +43,17 @@ object SparkEntry {
   private def runStream(s: SparkSession, df: DataFrame, sink: String,
                         mode: String): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.get(pKey)
-    s.conf.set(pKey, sys.props.getOrElse("graft.streamShufflePartitions", "8"))
     val ckptBase = java.nio.file.Paths.get(
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
         System.getProperty("java.io.tmpdir"))
     val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, s"graft-$sink-ckpt")
-    try {
+    try withConf(s, ShufflePartitions -> sys.props.getOrElse("graft.streamShufflePartitions", "8")) {
       val q = df.writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt.toString)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.stop()
     } finally {
-      s.conf.set(pKey, prevP)
       try java.nio.file.Files.walk(ckpt)
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
@@ -592,11 +589,14 @@ object SparkEntry {
           .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
           .forEach(p => java.nio.file.Files.delete(p))
       }
+      // no driver-local CC: the kill must land between distributed rounds
+      val cfg = DedupConfig.default.copy(ccLocalMaxEdges = 0)
       val killed = graft.dedup.CheckpointedDedup.run(
-        clips, workDir, DedupConfig.default, stopAfter = Some("labels_round_0"))
-      require(killed.isEmpty,
+        clips, workDir, cfg, stopAfter = Some("labels_round_0"))
+      require(killed.isEmpty && graft.snapshot.SnapshotLog.latestStage(s"$workDir/labels")
+        .exists(_.stage == "labels_round_0"),
         "p04 kill hook did not fire: CC converged before round 0 committed")
-      val resumed = graft.dedup.CheckpointedDedup.run(clips, workDir, DedupConfig.default)
+      val resumed = graft.dedup.CheckpointedDedup.run(clips, workDir, cfg)
         .getOrElse(sys.error("p04 resume returned no assignments"))
       resumed
         .select(col("clip_id"), col("cluster"), col("rep_clip_id"), col("is_rep"))

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.core.DedupConfig
+import graft.core.SessionConf._
 import graft.dedup.{CandidatePairs, ConnectedComponents}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.DataFrame
@@ -42,19 +43,15 @@ object EmbedDedup {
                planesPerTable: Int = 4, tables: Int = 32, seed: Long = 42L,
                cfg: DedupConfig = DedupConfig.default): DataFrame = {
     val spark = vectors.sparkSession
-    import spark.implicits._
     // clamp shuffle width to the input for the lane's eager section (pair
     // gen + verify + gating count + CC all run inside this call) — same
     // scale-adaptive rule as DedupPipeline.run / AudioDedup.run: a 2k-vector
     // query on a 32-partition session is mostly per-task fixed cost, while
     // at production row counts the clamp is a no-op. Results are
     // partitioning-independent (d10 oracle-gated).
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = spark.conf.get(pKey)
-    val p = math.max(2L, math.min(prevP.toLong, vectors.count() / 2000L + 1L))
-    spark.conf.set(pKey, p.toString)
-    try clustersInner(vectors, threshold, planesPerTable, tables, seed, cfg)
-    finally spark.conf.set(pKey, prevP)
+    withConf(spark, ShufflePartitions -> inputPartitions(spark, vectors.count()).toString) {
+      clustersInner(vectors, threshold, planesPerTable, tables, seed, cfg)
+    }
   }
 
   private def clustersInner(vectors: DataFrame, threshold: Double,
@@ -77,8 +74,8 @@ object EmbedDedup {
 
     val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
     val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb"))
-    // persisted BEFORE the gating count, mirroring DedupPipeline.run
-    // (DedupPipeline.scala:323): without the pin, the count materializes
+    // persisted BEFORE the gating count, mirroring DedupPipeline.run's
+    // in-memory edge stage: without the pin, the count materializes
     // the whole LSH -> pair gen -> double embedding join -> cosine verify
     // chain and then runLocal's collect (or run's checkpointedSym)
     // re-executes it — at the 1M-vector scale run that re-ran ~9.5M-edge
@@ -89,12 +86,7 @@ object EmbedDedup {
       .select(col("a"), col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // same small-graph gating as DedupPipeline.run: the driver union-find
-    // is bit-identical to the distributed fixpoint (min of a component is
-    // union-order-independent) and skips ~15 scheduler round-trips
-    val labels =
-      if (edges.count() <= cfg.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
-      else ConnectedComponents.run(edges, maxIter = 50)
+    val labels = ConnectedComponents.components(edges, edges.count(), cfg)
     // labels are materialized by here (runLocal collects; run checkpoints
     // each round) — the edge cache has served both consumers
     edges.unpersist(blocking = false)

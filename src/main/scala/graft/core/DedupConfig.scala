@@ -54,11 +54,6 @@ final case class DedupConfig(
       * degrade to sort-merge, not OOM the build side. ~5e6 medium clips
       * ≈ low-GB broadcast relations; tune per deployment. */
     broadcastLookupMaxRows: Long = 5000000L,
-    /** hot-bucket detection: exact per-key counts (default — deterministic
-      * under any partitioning, map-side-combined shuffle of distinct keys)
-      * vs the Misra-Gries sketch (O(k) driver bytes, the 10^12-row path,
-      * but partition-dependent near the threshold). */
-    sketchHotKeys: Boolean = false,
     /** edge-count ceiling for the driver-local union-find CC fast path
       * ([[graft.dedup.ConnectedComponents.runLocal]]): at or below this the
       * verified dup graph is a few MB and ~15 scheduler round-trips of
@@ -92,10 +87,7 @@ final case class DedupConfig(
       * pair co-emits >= 2 barring hot-key salt splits; corpus-wide shared
       * boilerplate (e.g. a common prefix) co-emits a few fingerprints on
       * MILLIONS of non-duplicate pairs, and this gate is what keeps the
-      * exact suffix-array verification off them. Only meaningful with
-      * exact hot-key counts: under sketchHotKeys the salt counts (and so
-      * co-emission) are partition-dependent and the pipeline ignores the
-      * gate (treats it as 1). */
+      * exact suffix-array verification off them. */
     minFpsHits: Int = 2
 ) {
   require(bands * rowsPerBand == numHashes, "bands*rowsPerBand must equal numHashes")

@@ -1,8 +1,7 @@
 package graft.dedup
 
 import graft.core.DedupConfig
-import graft.sketch.FreqSketch
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bucket → candidate-pair expansion with explicit skew handling.
@@ -11,17 +10,15 @@ import org.apache.spark.sql.functions._
   * block bucket, or a winnowing-fingerprint bucket. Output: unordered
   * candidate pairs (a, b), a < b.
   *
-  * Skew machinery (SURVEY.md §2.2 P7): hot bucket keys are detected with the
-  * Misra-Gries FreqSketch — the reference's `getFrequentKeys` heavy-hitter
-  * query (`FrequencyEstimator.java:75`, `FrequentItems.java:311-332`) run as
-  * a partial-aggregate (one tiny sketch per partition, merged on the driver,
-  * `FrequentItems.java:292-308` merge law) so hot-key detection costs O(k)
-  * driver bytes instead of a full per-key count shuffle. Hot keys are salted
-  * into ceil(size/cap) sub-buckets; within each (key, salt) group pairs are
-  * emitted all-pairs when small, sliding-window when large (bounding both
-  * per-bucket pair count AND per-vertex degree — which is what keeps the
-  * later CC joins hub-free); sub-buckets of a hot key are stitched with a
-  * chain over their min ids so true giant clusters stay connected.
+  * Skew machinery (SURVEY.md §2.2 P7): one repartition-and-sort exchange
+  * makes every bucket a contiguous sorted run in one partition, so each
+  * bucket's exact size is known while it streams by. Hot buckets (>= cap
+  * members) are salted into ceil(size/cap) sub-buckets; within each salt
+  * group pairs are emitted all-pairs when small, sliding-window when large
+  * (bounding both per-bucket pair count AND per-vertex degree — which is
+  * what keeps the later CC joins hub-free); sub-buckets of a hot key are
+  * stitched with a star over their min ids so true giant clusters stay
+  * connected.
   */
 object CandidatePairs {
 
@@ -47,40 +44,6 @@ object CandidatePairs {
   def overflowRuns(spark: SparkSession): Long = overflowAcc(spark.sparkContext).value
 
   final case class Bucket(key: Long, id: Long, lane: Int)
-
-  /** Detect bucket keys with (estimated) multiplicity >= threshold using a
-    * distributed-merged FreqSketch — one tiny partial sketch per partition,
-    * O(k) driver bytes, no per-key shuffle. The 10^12-row path; estimates
-    * near the threshold depend on partitioning (merge error), so the
-    * default pipeline uses [[hotKeysExact]] for bit-determinism. */
-  def hotKeysSketch(buckets: Dataset[Bucket], threshold: Long, sketchK: Int = 4096): Map[Long, Long] = {
-    import buckets.sparkSession.implicits._
-    val partials: Array[Array[Byte]] = buckets.select($"key").as[Long]
-      .mapPartitions { it =>
-        val sk = FreqSketch(sketchK)
-        it.foreach(k => sk.update(k))
-        Iterator.single(sk.serialize())
-      }.collect()
-    val merged = partials.foldLeft(FreqSketch(sketchK)) { (acc, bytes) =>
-      acc.merge(FreqSketch.deserialize(bytes))
-    }
-    merged.frequentKeys(threshold).map { case (key, _, _, ub) => key -> ub }.toMap
-  }
-
-  /** Exact hot keys: map-side-combined count per key, filtered to the hot
-    * tail before collect (the collected set is small by definition —
-    * there are at most totalRows/threshold hot keys). */
-  def hotKeysExact(buckets: Dataset[Bucket], threshold: Long): Map[Long, Long] = {
-    import buckets.sparkSession.implicits._
-    buckets.groupBy($"key").count()
-      .where($"count" >= threshold)
-      .as[(Long, Long)].collect().toMap
-  }
-
-  def hotKeys(buckets: Dataset[Bucket], threshold: Long,
-              cfg: DedupConfig): Map[Long, Long] =
-    if (cfg.sketchHotKeys) hotKeysSketch(buckets, threshold)
-    else hotKeysExact(buckets, threshold)
 
   /** Stitch the salt groups of one split hot bucket: every group minimum
     * pairs with the smallest minimum (a STAR, not a path). Same candidate
@@ -125,6 +88,71 @@ object CandidatePairs {
     pairsIt ++ starChain(reps, lane)
   }
 
+  /** Ids buffered per bucket run before [[overflowRun]] takes over. Clamp
+    * (ADVICE r2): the drain pins salts = MaxSalts, which is exact only when
+    * every overflow run has >= cap*MaxSalts members — so the buffer must
+    * hold at least that many regardless of how callers tune cap (Bench's
+    * graft.cap knob) or runBufferCap. At the default config cap*MaxSalts ==
+    * runBufferCap == 65536. */
+  private def runBufferOf(cfg: DedupConfig): Int =
+    math.min(Int.MaxValue.toLong,
+      math.max(cfg.maxBucketSize.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
+
+  /** Bounded-memory drain of a bucket run longer than the run buffer, shared
+    * by [[pairsPacked]] and [[pairsHamming]]: the ids are `prefix(0 until
+    * n)`, then `it`'s rows while their `keyOf` is still `bkey`. Counted on
+    * the overflow accumulator so the degrade is machine-visible (ADVICE
+    * r4).
+    *
+    * salts is pinned at MaxSalts — exact because runBuffer >= cap*MaxSalts
+    * ([[runBufferOf]]), so any overflowing run has saturated saltCount.
+    * Per-salt sliding windows of the ascending id stream emit the windowed
+    * pairs, per-salt minima accumulate for the star — O(MaxSalts * Window)
+    * memory however large the bucket. Groups always window-expand: expected
+    * group size is runBuffer / MaxSalts >= cap. Residual approximation
+    * (ADVICE r2): a salt group that lands *at or below* cap members would
+    * have gotten all-pairs expansion in saltedRun but gets the window here;
+    * with window >= cap/4 the chains keep recall (the skewed-fixture recall
+    * gate covers the regime), and any TRUE giant bucket's groups are far
+    * above cap anyway. */
+  private def overflowRun[R](bkey: Long, lane: Int, prefix: Array[Long], n: Int,
+                             it: scala.collection.BufferedIterator[R],
+                             keyOf: R => Long, idOf: R => Long,
+                             ovAcc: org.apache.spark.util.LongAccumulator): Iterator[(Long, Long, Int)] = {
+    ovAcc.add(1L)
+    val salts = MaxSalts
+    val win = Window - 1
+    val rings = Array.ofDim[Long](salts, win)
+    val counts = new Array[Long](salts)
+    val mins = new Array[Long](salts)
+    val seen = new Array[Boolean](salts)
+    val rest = new Iterator[Long] {
+      def hasNext: Boolean = it.hasNext && keyOf(it.head) == bkey
+      def next(): Long = idOf(it.next())
+    }
+    val windowed = (prefix.iterator.take(n) ++ rest).flatMap { id =>
+      val h = graft.core.Murmur3.hashLong(id, bkey)
+      val s = (((h % salts) + salts) % salts).toInt
+      if (!seen(s)) { seen(s) = true; mins(s) = id }
+      val c = counts(s)
+      val have = math.min(c, win.toLong).toInt
+      val ring = rings(s)
+      val out = Iterator.range(0, have).map { d =>
+        val prev = ring(((c - 1 - d) % win).toInt)
+        (math.min(prev, id), math.max(prev, id), lane)
+      }
+      ring((c % win).toInt) = id
+      counts(s) = c + 1
+      out
+    }
+    // chains built lazily AFTER the stream drains (++ is by-name)
+    def chains: Iterator[(Long, Long, Int)] = {
+      val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
+      starChain(reps, lane)
+    }
+    windowed ++ chains
+  }
+
   /** Expand sorted in-bucket ids to pairs: all-pairs when |ids| <= cap,
     * else sliding window of `Window` (bounded degree). */
   private def expand(ids: Array[Long], cap: Int): Iterator[(Long, Long)] = {
@@ -144,23 +172,13 @@ object CandidatePairs {
     }
   }
 
-  /** Full skew-aware pair generation. Output (a, b, lane): unordered unique
-    * pairs with the OR of the lane bits that produced them — verification
-    * then evaluates only the predicate clause(s) whose lane emitted a pair
-    * (a jaccard check is pointless for a pair only the SimHash-block lane
-    * produced, and vice versa).
-    *
-    * Data-motion layout:
-    *  - bucket rows travel as packed (bkey, id) 2-long rows — lane index
-    *    in the low 2 bits of the 64-bit key;
-    *  - the exact path ([[pairsPackedExact]]) moves them through ONE
-    *    repartition-and-sort exchange and streams complete bucket runs per
-    *    partition — counts, singleton drop, salting, expansion and chain
-    *    stitching all happen inside that single pass;
-    *  - `sketchHotKeys` selects the extreme-scale variant
-    *    ([[pairsPackedSketch]]): Misra-Gries hot-key detection in O(k)
-    *    driver bytes + salts-only broadcast, for corpora where even exact
-    *    per-key counting is too much state. */
+  /** Full skew-aware pair generation. Output (a, b, lane, fps_hits):
+    * unordered unique pairs with the OR of the lane bits that produced them
+    * — verification then evaluates only the predicate clause(s) whose lane
+    * emitted a pair (a jaccard check is pointless for a pair only the
+    * SimHash-block lane produced, and vice versa). Bucket rows travel as
+    * packed (bkey, id) 2-long rows — lane index in the low 2 bits of the
+    * 64-bit key — through [[pairsPacked]]'s single exchange. */
   def pairs(buckets: Dataset[Bucket], cfg: DedupConfig = DedupConfig.default): DataFrame = {
     import buckets.sparkSession.implicits._
     // lane bit -> 2-bit index packed into the key's low bits (keyspaces are
@@ -175,12 +193,8 @@ object CandidatePairs {
 
   /** [[pairs]] over an already-packed (bkey, id) bucket table — the
     * production entry ([[DedupPipeline.candidates]] emits packed rows in
-    * its single pass over the features cache). */
-  def pairsPacked(packedIn: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
-    if (cfg.sketchHotKeys) pairsPackedSketch(packedIn, cfg)
-    else pairsPackedExact(packedIn, cfg)
-
-  /** Exact path: ONE exchange for the whole pair generation.
+    * its single pass over the features cache). ONE exchange for the whole
+    * pair generation.
     *
     * `repartition(bkey) + sortWithinPartitions(bkey, id)` makes every
     * bucket a contiguous sorted run inside exactly one partition; a single
@@ -198,28 +212,17 @@ object CandidatePairs {
     *    byte-identical to the old flow and independent of partitioning —
     *    each group expanded all-pairs/windowed, plus the chain pairs over
     *    the salt-ordered group minima that keep a split bucket connected;
-    *  - runs longer than RunBuffer ids (~10^9-member buckets; cannot exist
-    *    below cap*MaxSalts rows) switch to a bounded-memory streaming mode:
-    *    salts saturates at MaxSalts (which is exact for any run this long),
-    *    per-salt sliding windows of the ascending id stream emit the same
-    *    windowed pairs, per-salt minima accumulate for the chains — O(
-    *    MaxSalts * Window) memory however large the bucket.
+    *  - runs longer than the run buffer (cannot exist below cap*MaxSalts
+    *    rows) drain through the bounded-memory [[overflowRun]].
     *
     * The sort is the shuffle's own ordering work (2-long rows); at 10^12
     * rows this is strictly less motion than the old flow shuffled for the
     * count alone. */
-  private[dedup] def pairsPackedExact(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
+  def pairsPacked(packedIn: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
     val spark = packedIn.sparkSession
     import spark.implicits._
     val cap = cfg.maxBucketSize
-    // clamp (ADVICE r2): the overflow path pins salts = MaxSalts, which is
-    // exact only when every overflow run has >= cap*MaxSalts members — so
-    // the buffer must hold at least that many regardless of how callers
-    // tune cap (Bench's graft.cap knob) or runBufferCap. At the default
-    // config cap*MaxSalts == runBufferCap == 65536: behavior (and the gate
-    // checksum) unchanged.
-    val runBuffer = math.min(Int.MaxValue.toLong,
-      math.max(cap.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
+    val runBuffer = runBufferOf(cfg)
 
     val ovAcc = overflowAcc(spark.sparkContext)
     val parts = packedIn
@@ -241,57 +244,12 @@ object CandidatePairs {
           arr(n) = it.next()._2
           n += 1
         }
-        if (it.hasNext && it.head._1 == bkey) overflowRun(bkey, lane, arr, n)
+        if (it.hasNext && it.head._1 == bkey)
+          overflowRun[(Long, Long)](bkey, lane, arr, n, it, _._1, _._2, ovAcc)
         else if (n < 2) Iterator.empty
         else if (n < cap) expand(java.util.Arrays.copyOf(arr, n), cap)
           .map { case (a, b) => (a, b, lane) }
         else saltedRun(bkey, lane, arr, n, cap)
-      }
-
-      /** count > RunBuffer: bounded-memory streaming variant. salts is
-        * pinned at MaxSalts — exact because runBuffer >= cap*MaxSalts (the
-        * clamp above), so any overflowing run has saturated saltCount.
-        * Groups always window-expand: expected group size is runBuffer /
-        * MaxSalts >= cap. Residual approximation (ADVICE r2): a salt group
-        * that lands *at or below* cap members would have gotten all-pairs
-        * expansion in saltedRun but gets the window here; with window >=
-        * cap/4 the chains keep recall (the skewed-fixture recall gate
-        * covers the regime), and any TRUE giant bucket's groups are far
-        * above cap anyway. */
-      def overflowRun(bkey: Long, lane: Int, prefix: Array[Long], pn: Int): Iterator[(Long, Long, Int)] = {
-        ovAcc.add(1L)
-        val salts = MaxSalts
-        val win = Window - 1
-        val rings = Array.ofDim[Long](salts, win)
-        val counts = new Array[Long](salts)
-        val mins = new Array[Long](salts)
-        val seen = new Array[Boolean](salts)
-        val rest = new Iterator[Long] {
-          def hasNext: Boolean = it.hasNext && it.head._1 == bkey
-          def next(): Long = it.next()._2
-        }
-        val src = prefix.iterator.take(pn) ++ rest
-        val windowed = src.flatMap { id =>
-          val h = graft.core.Murmur3.hashLong(id, bkey)
-          val s = (((h % salts) + salts) % salts).toInt
-          if (!seen(s)) { seen(s) = true; mins(s) = id }
-          val c = counts(s)
-          val have = math.min(c, win.toLong).toInt
-          val ring = rings(s)
-          val out = Iterator.range(0, have).map { d =>
-            val prev = ring(((c - 1 - d) % win).toInt)
-            (math.min(prev, id), math.max(prev, id), lane)
-          }
-          ring((c % win).toInt) = id
-          counts(s) = c + 1
-          out
-        }
-        // chains built lazily AFTER the stream drains (++ is by-name)
-        def chains: Iterator[(Long, Long, Int)] = {
-          val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
-          starChain(reps, lane)
-        }
-        windowed ++ chains
       }
 
       new Iterator[Iterator[(Long, Long, Int)]] {
@@ -397,14 +355,14 @@ object CandidatePairs {
   }
 
   /** Exact Hamming-join pair generation over (bkey, id, fp) bucket rows —
-    * the keyed sibling of [[pairsPackedExact]] for predicates of the form
+    * the keyed sibling of [[pairsPacked]] for predicates of the form
     * "Hamming(fp_a, fp_b) <= maxHam AND <secondary check>". Same
     * single-exchange layout (repartition + sortWithinPartitions, 3-long
     * rows, complete runs streamed per partition); over-cap runs recurse via
     * [[expandHamming]] instead of windowing, so candidate recall for the
     * Hamming budget is COMPLETE at any bucket size below `runBufferCap`
-    * (beyond it the same bounded-memory windowed drain as the packed path
-    * applies — a ~10^5-member single bucket, the documented boundary).
+    * (beyond it the packed path's bounded-memory [[overflowRun]] applies —
+    * a ~10^5-member single bucket, the documented boundary).
     *
     * `pinnedMask(bkey)` must return the fingerprint bits the level-0 bucket
     * key already pins (the pigeonhole block the row was emitted for). */
@@ -413,8 +371,7 @@ object CandidatePairs {
     val spark = packedIn.sparkSession
     import spark.implicits._
     val cap = cfg.maxBucketSize
-    val runBuffer = math.min(Int.MaxValue.toLong,
-      math.max(cap.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
+    val runBuffer = runBufferOf(cfg)
 
     val ovAcc = overflowAcc(spark.sparkContext)
     val parts = packedIn
@@ -441,45 +398,11 @@ object CandidatePairs {
           fs(n) = r._3
           n += 1
         }
-        if (it.hasNext && it.head._1 == bkey) {
-          // beyond runBuffer: bounded-memory windowed drain (ids only),
-          // mirroring the packed path's overflowRun boundary. The drain
-          // forfeits Hamming-recall completeness for THIS run — counted on
-          // the overflow accumulator so the degrade is machine-visible
-          // (ADVICE r4), never silent.
-          ovAcc.add(1L)
-          val salts = MaxSalts
-          val win = Window - 1
-          val rings = Array.ofDim[Long](salts, win)
-          val counts = new Array[Long](salts)
-          val mins = new Array[Long](salts)
-          val seen = new Array[Boolean](salts)
-          val rest = new Iterator[Long] {
-            def hasNext: Boolean = it.hasNext && it.head._1 == bkey
-            def next(): Long = it.next()._2
-          }
-          val src = ids.iterator.take(n) ++ rest
-          val windowed = src.flatMap { id =>
-            val h = graft.core.Murmur3.hashLong(id, bkey)
-            val s = (((h % salts) + salts) % salts).toInt
-            if (!seen(s)) { seen(s) = true; mins(s) = id }
-            val c = counts(s)
-            val have = math.min(c, win.toLong).toInt
-            val ring = rings(s)
-            val out = Iterator.range(0, have).map { d =>
-              val prev = ring(((c - 1 - d) % win).toInt)
-              (math.min(prev, id), math.max(prev, id), lane)
-            }
-            ring((c % win).toInt) = id
-            counts(s) = c + 1
-            out
-          }
-          def chains: Iterator[(Long, Long, Int)] = {
-            val reps = Iterator.range(0, salts).filter(seen(_)).map(mins(_)).toArray
-            starChain(reps, lane)
-          }
-          windowed ++ chains
-        } else if (n < 2) Iterator.empty
+        // beyond runBuffer the drain forfeits Hamming-recall completeness
+        // for THIS run (it windows ids only)
+        if (it.hasNext && it.head._1 == bkey)
+          overflowRun[(Long, Long, Long)](bkey, lane, ids, n, it, _._1, _._2, ovAcc)
+        else if (n < 2) Iterator.empty
         else expandHamming(java.util.Arrays.copyOf(ids, n),
           java.util.Arrays.copyOf(fs, n), Array.tabulate(n)(identity),
           fullMask & ~pinnedMask(bkey), cap, maxHam, lane, bkey, 0)
@@ -494,92 +417,11 @@ object CandidatePairs {
     aggregatePairs(emitted)
   }
 
-  /** Sketch path (the documented 10^12-row extreme: even the count>=2 key
-    * set outgrows a broadcast): Misra-Gries hot keys, O(k) driver bytes,
-    * salts-only broadcast, no singleton drop. */
-  private[dedup] def pairsPackedSketch(packedIn: DataFrame, cfg: DedupConfig): DataFrame = {
-    val spark = packedIn.sparkSession
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val cap = cfg.maxBucketSize
-
-    val packed = packedIn.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // salt count for a key with `cnt` members: ceil-ish cnt/cap in [2, MaxSalts]
-    def saltCount(cnt: Column): Column = greatest(lit(2L),
-      least(lit(MaxSalts.toLong), (cnt / cap).cast("long") + 1L)).cast("int")
-
-    // sketch directly over the packed keyspace (lanes are disjoint by
-    // construction, so per-bkey hotness IS per-(key,lane) hotness)
-    val partials: Array[Array[Byte]] = packed.select($"bkey").as[Long]
-      .mapPartitions { it =>
-        val sk = FreqSketch(4096)
-        it.foreach(k => sk.update(k))
-        Iterator.single(sk.serialize())
-      }.collect()
-    val merged = partials.foldLeft(FreqSketch(4096)) { (acc, bytes) =>
-      acc.merge(FreqSketch.deserialize(bytes))
-    }
-    val hot = merged.frequentKeys(cap.toLong).map { case (k, _, _, ub) => (k, ub) }
-    val saltsDf = hot.toSeq.toDF("bkey", "ub")
-      .select($"bkey", saltCount($"ub").as("salts"))
-    val salted = packed.join(broadcast(saltsDf), Seq("bkey"), "left")
-
-    // pmod(murmur(id, bkey), salts) spreads a hot key's members over its
-    // salt groups deterministically (a pure function of the row — identical
-    // at any parallelism). skey re-mixes the salt into fresh high bits,
-    // keeping the lane index recoverable from the low 2 bits.
-    val withSkey = salted
-      .withColumn("salt", when($"salts".isNull, lit(0)).otherwise(
-        pmod(graft.functions.GraftFunctions.murmur3_pair($"id", $"bkey"),
-          $"salts".cast("long")).cast("int")))
-      .withColumn("skey", when($"salt" === 0, $"bkey").otherwise(
-        graft.functions.GraftFunctions.murmur3_pair($"bkey", $"salt".cast("long"))
-          .bitwiseAND(lit(~3L)).bitwiseOR($"bkey".bitwiseAND(lit(3L)))))
-
-    // pairs within each skey group: typed groupByKey + flatMapGroups — a
-    // sort-based shuffle of 2-long rows that streams each group once.
-    // (The collect_list/ObjectHashAggregate alternative spent more task CPU
-    // in SizeEstimator graph walks than in pair expansion; measured via
-    // jstack sampling at local[32].) Groups are bounded by construction:
-    // cold keys have < cap rows, hot keys are salted into ~cap-sized
-    // sub-buckets, so the per-group id array is O(cap).
-    val within = withSkey
-      .select($"skey", $"id").as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (skey: Long, rows: Iterator[(Long, Long)]) =>
-        val lane = 1 << (skey & 3L).toInt
-        val ids = rows.map(_._2).toArray
-        expand(ids, cap).map { case (a, b) => (a, b, lane) }
-      }
-      .toDF("a", "b", "lane")
-
-    // chain stitching across salt groups of the same hot key: min-id per
-    // (bkey, salt) via a map-side-combinable primitive hash agg over the
-    // hot rows only (the broadcast probe filters before the agg, so the
-    // shuffled partials are hot-keys-only, tiny), then per-bkey chains over
-    // the salt-ordered reps.
-    val chains = withSkey
-      .where($"salts".isNotNull)
-      .groupBy($"bkey", $"salt")
-      .agg(min($"id").as("minId"))
-      .groupBy($"bkey")
-      .agg(sort_array(collect_list(struct($"salt", $"minId"))).as("reps"))
-      .select($"bkey".bitwiseAND(lit(3L)).cast("int").as("li"), $"reps.minId".as[Array[Long]])
-      .as[(Int, Array[Long])]
-      .flatMap { case (li, reps) => starChain(reps, 1 << li) }
-      .toDF("a", "b", "lane")
-
-    aggregatePairs(within.union(chains))
-  }
-
   /** lane = OR of the lane bits that produced the pair (verification then
     * evaluates only the clauses whose lane emitted it). fps_hits counts the
-    * winnow-lane CO-EMISSIONS of the pair: under exact hot-key detection
-    * every term (bucket membership, salt assignment, window adjacency) is a
-    * pure function of the data, so the count is parallelism-independent and
-    * safe to gate on. (Under sketchHotKeys the salt counts depend on
-    * partition-order merge error — the gate must not be used there.) */
+    * winnow-lane CO-EMISSIONS of the pair: every term (bucket membership,
+    * salt assignment, window adjacency) is a pure function of the data, so
+    * the count is parallelism-independent and safe to gate on. */
   private def aggregatePairs(emitted: DataFrame): DataFrame = {
     import emitted.sparkSession.implicits._
     emitted.where($"a" =!= $"b")

@@ -1,6 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.DedupConfig
+import graft.core.SessionConf._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -10,8 +12,9 @@ import org.apache.spark.sql.types.DecimalType
   * Discipline grafted from the reference's merge-until-fixpoint contract
   * (`FrequentItems.java:292-308`): per-round state is a mergeable (id →
   * min-label) table; rounds are associative label-min joins; convergence is
-  * detected by an exact changed-count. `localCheckpoint` truncates lineage
-  * each round (iterative joins otherwise stack exponentially deep plans).
+  * detected by an unchanged exact [[labelSum]]. `localCheckpoint` truncates
+  * lineage each round (iterative joins otherwise stack exponentially deep
+  * plans).
   *
   * Scale notes (100 TB story):
   *  - vertices are derived from edges only — singleton clips never enter the
@@ -90,15 +93,6 @@ object ConnectedComponents {
   def step(sym: DataFrame, labels: DataFrame): DataFrame =
     jump(jump(propagate(sym, labels).localCheckpoint(true)))
 
-  /** Count of vertices whose label changed between rounds (exact convergence
-    * signal; both inputs expected checkpointed). Retained for tests; the run
-    * loop uses [[labelSum]] — same signal, no join. */
-  def changedCount(oldLabels: DataFrame, newLabels: DataFrame): Long =
-    newLabels.as("n")
-      .join(oldLabels.as("o"), col("n.id") === col("o.id"))
-      .where(col("n.label") =!= col("o.label"))
-      .count()
-
   /** Exact sum of labels as a decimal (no 64-bit wrap at 10^12 vertices).
     * Per-vertex labels are monotone non-increasing under min-propagation and
     * the vertex set is fixed, so the sum is strictly decreasing until the
@@ -117,14 +111,13 @@ object ConnectedComponents {
     * a component is independent of union order, so the result is
     * bit-identical to the distributed loop's fixpoint.
     *
-    * Scale contract: this is the small-graph fast path ONLY — callers gate
-    * on an edge count they already have (DedupPipeline counts edges to
-    * scope its conf anyway) with a threshold whose collect is trivially
-    * driver-safe (10^5 edges = 1.6 MB). The iterative loop in [[run]]
-    * remains THE production path and the one the 160k-clip bench exercises
-    * (~5x10^5 edges); a tiny dedup tail-graph simply does not need a
-    * cluster, and ~15 scheduler round-trips of 3-task stages cost more
-    * than the entire union-find. */
+    * Scale contract: this is the small-graph fast path ONLY — [[components]]
+    * gates it on an edge count the caller already has, with a threshold
+    * whose collect is trivially driver-safe (10^5 edges = 1.6 MB). The
+    * iterative loop in [[run]] remains THE production path and the one the
+    * 160k-clip bench exercises (~5x10^5 edges); a tiny dedup tail-graph
+    * simply does not need a cluster, and ~15 scheduler round-trips of
+    * 3-task stages cost more than the entire union-find. */
   def runLocal(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -168,10 +161,33 @@ object ConnectedComponents {
     spark.createDataset(out.toSeq).toDF("id", "label")
   }
 
+  /** Called after each convergence check with the labels, the check's
+    * round index and whether the labels are the fixpoint; returns false to
+    * end the loop early. */
+  type OnCheck = (DataFrame, Int, Boolean) => Boolean
+  val NoCheck: OnCheck = (_, _, _) => true
+
+  /** THE CC entry of every dedup lane: the driver-local union-find
+    * ([[runLocal]]) when `edgeCount` is at most `cfg.ccLocalMaxEdges`, else
+    * the distributed loop ([[run]]) resumed from `from` when given. The
+    * union-find's result reaches `onCheck` as one converged check (round
+    * 0). Output is bit-identical either way. */
+  def components(edges: DataFrame, edgeCount: Long, cfg: DedupConfig,
+                 from: Option[(DataFrame, Int)] = None,
+                 onCheck: OnCheck = NoCheck): DataFrame =
+    if (edgeCount <= cfg.ccLocalMaxEdges) {
+      val labels = runLocal(edges)
+      onCheck(labels, 0, true)
+      labels
+    } else run(edges, maxIter = 50, from, onCheck)
+
   /** @param edges DataFrame with long columns (a, b) — undirected unique pairs.
+    * @param from starting labels and the round index they complete, instead
+    *             of every vertex labelling itself at round 0.
     * @return DataFrame (id: Long, label: Long) — label = min id in component.
     */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 50, from: Option[(DataFrame, Int)] = None,
+          onCheck: OnCheck = NoCheck): DataFrame = {
     val spark = edges.sparkSession
     // AQE re-plans every exchange as its own mini-job: across ~5 rounds x
     // ~5 exchanges that is ~25 serial driver round-trips for label tables
@@ -179,9 +195,6 @@ object ConnectedComponents {
     // plans are tiny and regular; static planning runs each round as ONE
     // job. (Restored after the loop — the big relational stages DO want
     // AQE's runtime broadcast decisions.)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    spark.conf.set(aqeKey, "false")
     // The jump/step joins operate on per-round (id, label) tables. The
     // static planner sees small stats and picks BroadcastHashJoin — but the
     // label table is REBUILT every round, so each round pays two serial
@@ -190,20 +203,16 @@ object ConnectedComponents {
     // production scale the label table is O(vertices) and could never be
     // broadcast anyway — shuffle joins are the only shape that survives
     // 10^12 rows, so force them at every scale.
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBc = spark.conf.getOption(bcKey)
-    spark.conf.set(bcKey, "-1")
-    try {
+    withConf(spark, AdaptiveEnabled -> "false", AutoBroadcastThreshold -> "-1") {
       // previously the 25 MB sym table was re-exchanged ~4x per round (the
       // 3-way union in symmetrize has no useful partitioning); now only the
       // few-MB label table moves per round — see [[checkpointedSym]]
-      val p = math.max(2, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val p = math.max(2, spark.conf.get(ShufflePartitions).toInt)
       val sym = checkpointedSym(edges, p)
-      var labels = initLabels(sym).localCheckpoint(true)
+      var (labels, round) = from.getOrElse((initLabels(sym).localCheckpoint(true), 0))
       var prevSum = labelSum(labels)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
+      var go = true
+      while (go && round < maxIter) {
         // TWO propagation rounds per convergence check: at worst one extra
         // (cheap) round runs after the fixpoint. Each step internally runs
         // one eager job for its propagate table (see [[step]]); the jump
@@ -211,24 +220,15 @@ object ConnectedComponents {
         // next propagate, or labelSum), so the single materializing action
         // computes it once and the lazy localCheckpoint caches + truncates
         // lineage in that same job.
-        val jumped = step(sym, step(sym, labels).localCheckpoint(false))
+        labels = step(sym, step(sym, labels).localCheckpoint(false))
           .localCheckpoint(false)
-        val s = labelSum(jumped)
-        converged = s.compareTo(prevSum) == 0
+        val s = labelSum(labels)
+        val converged = s.compareTo(prevSum) == 0
         prevSum = s
-        labels = jumped
-        iter += 1
+        go = onCheck(labels, round, converged) && !converged
+        round += 1
       }
       labels
-    } finally {
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
     }
   }
 }

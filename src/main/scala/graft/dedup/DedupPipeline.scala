@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.core.DedupConfig
+import graft.core.SessionConf._
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -144,15 +145,12 @@ object DedupPipeline {
         (col("lane").bitwiseAND(lit(LaneBands)) =!= 0) &&
           least(col("nsh_a"), col("nsh_b")).cast("double") >=
             greatest(col("nsh_a"), col("nsh_b")) * cfg.jaccardThreshold)
-      // fps_hits gate: under EXACT hot-key counts every co-emission term is
-      // a pure function of the data (bucket membership, salt = pmod(murmur),
-      // window adjacency), so the count is parallelism-independent and safe
-      // to gate on. Under sketchHotKeys the salt counts carry partition-
-      // order merge error — the gate is forced to 1 there to keep the edge
-      // set deterministic.
+      // fps_hits gate: every co-emission term is a pure function of the
+      // data (bucket membership, salt = pmod(murmur), window adjacency), so
+      // the count is parallelism-independent and safe to gate on
       .withColumn("con_possible",
         (col("lane").bitwiseAND(lit(LaneFps)) =!= 0) &&
-          col("fps_hits") >= (if (cfg.sketchHotKeys) 1 else cfg.minFpsHits) &&
+          col("fps_hits") >= cfg.minFpsHits &&
           least(col("nlen_a"), col("nlen_b")) >= cfg.minContainLen)
       .select(col("a"), col("b"), col("ham_ok"), col("jac_possible"), col("con_possible"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -269,25 +267,18 @@ object DedupPipeline {
     * stays pinned — the caller frees it by letting the DataFrame go after
     * consumption (`out.unpersist()` equivalent: its backing RDD is the only
     * run()-created entry left in `sc.getPersistentRDDs`). */
-  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame = {
+  def run(clips: DataFrame, cfg: DedupConfig = DedupConfig.default): DataFrame =
+    runStages(clips, cfg, new InMemory(clips.sparkSession)).get
+
+  /** The text lane's run: input-sized shuffle width and conf scope around
+    * [[stageSequence]], each stage's output kept in `store`. The final
+    * assignments are materialized inside the scope, so every internal
+    * action plans under it. */
+  private[dedup] def runStages(clips: DataFrame, cfg: DedupConfig,
+                               store: StageStore): Option[DataFrame] = {
     val spark = clips.sparkSession
-    val sc = spark.sparkContext
-    // Size the pipeline's shuffle parallelism to the INPUT, not the
-    // session: at 5k documents a 32-partition session turns the ~40-job
-    // pipeline into thousands of near-empty tasks whose fixed scheduling/
-    // deserialize cost dwarfs the work (measured: 5k docs took 71 task-CPU
-    // seconds, almost all overhead). parquet count() is footer-metadata
-    // fast; results are partitioning-independent (checksum-gated), so the
-    // clamp only changes wall time. The final assignments table is
-    // materialized eagerly so every internal action runs under the clamp.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     val nRows = clips.count()
-    val p = math.max(2L, math.min(prev.toLong, nRows / 2000L + 1L))
-    // fat stages (pair gen / pair agg / verify) plan under p * factor —
-    // stage-tail insurance against bucket-key skew; everything downstream
-    // of the edge materialization plans under the plain clamp (see below)
-    spark.conf.set(key, (p * math.max(1, cfg.fatShuffleFactor)).toString)
+    val p = inputPartitions(spark, nRows)
     // broadcast-pinned verification lookups are only safe while one executor
     // can hold the corpus' slim+norm tables; beyond the row ceiling fall
     // back automatically and let AQE pick the join strategy (ADVICE r2:
@@ -305,52 +296,84 @@ object DedupPipeline {
     // same summed task run-time, ~5% less wall). At huge-corpus scale the
     // broadcast pin auto-falls-back (cfgEff above) and AQE stays ON — there
     // its runtime skew-join splitting is worth the latency.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    if (cfgEff.broadcastLookups) spark.conf.set(aqeKey, "false")
+    val aqe = if (cfgEff.broadcastLookups) Seq(AdaptiveEnabled -> "false") else Nil
     // Every broadcast the pipeline WANTS is an explicit broadcast() hint
     // (hints ignore this threshold); what the auto threshold adds is
     // unwanted static-planner broadcasts of per-round or per-cluster tables
     // (CC jump labels, assignments reps) that are rebuilt each use — serial
     // build latency here, an O(vertices) broadcast OOM at production scale.
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBc = spark.conf.getOption(bcKey)
-    spark.conf.set(bcKey, "-1")
-    val preexisting = sc.getPersistentRDDs.keySet
+    val scope = Seq(ShufflePartitions -> p.toString, AutoBroadcastThreshold -> "-1") ++ aqe
+    // fat stages (pair gen / pair agg / verify) plan under p * factor —
+    // stage-tail insurance against bucket-key skew; everything downstream
+    // of the edge materialization plans under the plain clamp
+    val fat = ShufflePartitions -> (p * math.max(1, cfgEff.fatShuffleFactor)).toString
+    withConf(spark, scope: _*) {
+      stageSequence(spark, store, cfgEff, p, fat)(
+        features(clips, cfgEff), f => verifiedEdges(f, candidates(f, cfgEff), cfgEff))
+    }
+  }
+
+  /** Where [[stageSequence]] keeps each stage's output. A method returning
+    * None ends the run after its stage. */
+  private[dedup] trait StageStore {
+    /** The features table; `p` is the run's input-sized shuffle width. */
+    def features(f: => DataFrame, p: Int): Option[DataFrame]
+    /** The verified edges and their row count. */
+    def edges(e: => DataFrame): Option[(DataFrame, Long)]
+    def labels(edges: DataFrame, edgeCount: Long, cfg: DedupConfig): Option[DataFrame]
+    def assignments(a: => DataFrame): Option[DataFrame]
+    /** Drop what the run cached; called on every exit. */
+    def release(): Unit
+  }
+
+  /** THE stage sequence of every dedup run: features → edges (candidates +
+    * verify) → CC → assignments. Only where each output lives varies, by
+    * `store`. The first two stages run under the `fat` conf overrides; the
+    * edge stage materializes its output (count or commit) inside them —
+    * physical plans are drawn at action time, so pair gen and verification
+    * execute under `fat`, CC and assignments under the caller's scope. */
+  private[dedup] def stageSequence(spark: SparkSession, store: StageStore, cfg: DedupConfig,
+                                   p: Int, fat: (String, String)*)(
+      features: => DataFrame, edges: DataFrame => DataFrame): Option[DataFrame] =
     try {
-      val f = features(clips, cfgEff).persist(StorageLevel.MEMORY_AND_DISK)
-      val cands = candidates(f, cfgEff)
-      val edges = verifiedEdges(f, cands, cfgEff).persist(StorageLevel.MEMORY_AND_DISK)
-      // materialize the edge persist NOW: physical plans are drawn at action
-      // time, so this is the boundary between the fat-stage conf scope above
-      // (pair gen + verification execute inside this count) and the plain
-      // clamp the CC loop and output stages plan under below
-      val edgeCount = edges.count()
-      spark.conf.set(key, p.toString)
-      val labels =
-        if (edgeCount <= cfgEff.ccLocalMaxEdges) ConnectedComponents.runLocal(edges)
-        else ConnectedComponents.run(edges, maxIter = 50)
-      val out = assignments(f, labels).localCheckpoint(true)
-      // release every cache the pipeline created (VERDICT r2: f/edges and
-      // the CC-round localCheckpoint RDDs leaked into long-lived sessions):
-      // the eager checkpoint above has materialized `out`, so nothing
-      // downstream re-reads them. Keep only out's own backing RDD(s).
-      f.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      val keep = org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds(out)
+      withConf(spark, fat: _*) {
+        store.features(features, p).flatMap(f => store.edges(edges(f)).map(f -> _))
+      }.flatMap { case (f, (e, edgeCount)) =>
+        store.labels(e, edgeCount, cfg).flatMap(labels => store.assignments(assignments(f, labels)))
+      }
+    } finally store.release()
+
+  /** Stage outputs cached in memory: features and edges persisted (the
+    * edges eagerly, by their count), the assignments eagerly checkpointed.
+    * [[release]] drops every cache the run created (VERDICT r2: f/edges and
+    * the CC-round localCheckpoint RDDs leaked into long-lived sessions)
+    * except the assignments' own backing RDD(s). */
+  private[dedup] final class InMemory(spark: SparkSession) extends StageStore {
+    private val sc = spark.sparkContext
+    private val preexisting = sc.getPersistentRDDs.keySet
+    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var out: Option[DataFrame] = None
+
+    private def persisted(df: DataFrame): DataFrame = {
+      cached += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    def features(f: => DataFrame, p: Int): Option[DataFrame] = Some(persisted(f))
+    def edges(e: => DataFrame): Option[(DataFrame, Long)] = {
+      val d = persisted(e)
+      Some((d, d.count()))
+    }
+    def labels(edges: DataFrame, edgeCount: Long, cfg: DedupConfig): Option[DataFrame] =
+      Some(ConnectedComponents.components(edges, edgeCount, cfg))
+    def assignments(a: => DataFrame): Option[DataFrame] = {
+      out = Some(a.localCheckpoint(true))
+      out
+    }
+    def release(): Unit = {
+      cached.foreach(_.unpersist(blocking = false))
+      val keep = out.map(org.apache.spark.sql.graftshim.PlanShim.checkpointRddIds).getOrElse(Set.empty)
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!preexisting.contains(id) && !keep.contains(id)) rdd.unpersist(blocking = false)
-      }
-      out
-    } finally {
-      spark.conf.set(key, prev)
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
       }
     }
   }

@@ -56,11 +56,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
     val p = math.max(2, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    graft.core.SessionConf.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val sym = graft.dedup.ConnectedComponents.checkpointedSym(edges, p)
       val labels = graft.dedup.ConnectedComponents.initLabels(sym).localCheckpoint(true)
       // propagate() is the round's only edge-table join (step() eagerly
@@ -83,9 +80,6 @@ class PlanSpec extends AnyFunSuite with SparkTest {
         assert(!belowJoin.exists(_.nodeName == "Sort"),
           s"sym re-sorted before its propagate join (ordering not preserved):\n$exec")
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 

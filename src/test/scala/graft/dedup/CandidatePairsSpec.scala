@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit gates for the single-exchange skew-aware pair generation
-  * ([[CandidatePairs.pairsPackedExact]]) including the bounded-memory
+  * ([[CandidatePairs.pairsPacked]]) including the bounded-memory
   * overflow path that bench-scale corpora never reach. */
 class CandidatePairsSpec extends AnyFunSuite with SparkTest {
 
@@ -64,12 +64,15 @@ class CandidatePairsSpec extends AnyFunSuite with SparkTest {
   }
 
   test("overflow path (run > runBufferCap): bounded memory, still connected, deterministic") {
-    val small = cfg.copy(maxBucketSize = 8, runBufferCap = 64)
-    val ids = (0L until 500L).map(_ * 3L + 2L)
+    // the run buffer is clamped to >= maxBucketSize * MaxSalts = 1024 ids
+    val small = cfg.copy(maxBucketSize = 1, runBufferCap = 64)
+    val ids = (0L until 1500L).map(_ * 3L + 2L)
     val rows = ids.map(id => (20L, id)) ++ Seq((24L, 5L), (24L, 6L))
     val o1 = CandidatePairs.pairsPacked(packed(rows, 3), small)
     val o2 = CandidatePairs.pairsPacked(packed(rows, 11), small)
+    val ov0 = CandidatePairs.overflowRuns(spark)
     val s1 = pairSet(o1)
+    assert(CandidatePairs.overflowRuns(spark) > ov0, "the 1500-id run must take the overflow drain")
     assert(s1 === pairSet(o2), "overflow expansion must be partitioning-independent")
     assert(connected(ids, s1), "overflow bucket must stay connected")
     assert(s1.contains((5L, 6L)), "cold bucket behind the overflow run must still pair")

@@ -39,6 +39,18 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
       .select(col("a"), col("b")).as[(Long, Long)].collect().toSet
   }
 
+  /** True when `pairs` connect every id of `ids` (union-find). */
+  private def connected(ids: Seq[Long], pairs: Set[(Long, Long)]): Boolean = {
+    val idx = ids.zipWithIndex.toMap
+    val root = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = { var r = x; while (root(r) != r) { root(r) = root(root(r)); r = root(r) }; r }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(idx(a)), find(idx(b)))
+      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.indices.map(find).distinct.size == 1
+  }
+
   test("recall is complete under a tiny cap on a sparse, zero-block-heavy corpus") {
     // mimic the real pathology: sparse fingerprints whose quiet-band blocks
     // collapse onto value 0, forming huge heterogeneous buckets. cap=8
@@ -97,14 +109,25 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
     val ids = Array.tabulate(n)(i => i.toLong * 2654435761L + 11L)
     val got = emittedPairs(fps, cap = 8)
     assert(got.nonEmpty)
-    val idx = ids.zipWithIndex.toMap
-    val root = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { var r = x; while (root(r) != r) { root(r) = root(root(r)); r = root(r) }; r }
-    got.foreach { case (a, b) =>
-      val (ra, rb) = (find(idx(a)), find(idx(b)))
-      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    assert((0 until n).map(find).distinct.size == 1, "swarm split by the fallback")
+    assert(connected(ids.toSeq, got), "swarm split by the fallback")
+  }
+
+  test("a run longer than the run buffer drains bounded: counted, partition-independent, connected") {
+    import spark.implicits._
+    // maxBucketSize = 1 clamps the run buffer to MaxSalts = 1024 ids
+    val cfg = DedupConfig.default.copy(maxBucketSize = 1, runBufferCap = 64)
+    val ids = (0L until 1500L).map(_ * 2654435761L + 11L)
+    val rows = ids.map(id => (8L << 2, id, id & fullMask)).toDF("bkey", "id", "fp")
+    def pairs(parts: Int): Set[(Long, Long)] =
+      CandidatePairs
+        .pairsHamming(rows.repartition(parts), cfg, SpectralSig.MaxHamming, fullMask,
+          AudioDedup.pinnedMask)
+        .select(col("a"), col("b")).as[(Long, Long)].collect().toSet
+    val ov0 = CandidatePairs.overflowRuns(spark)
+    val got = pairs(3)
+    assert(CandidatePairs.overflowRuns(spark) > ov0, "the 1500-id run must take the overflow drain")
+    assert(got == pairs(11), "overflow drain must be partitioning-independent")
+    assert(connected(ids, got), "overflow bucket must stay connected")
   }
 
   test("splitMask round-robins bits into maxHam+1 nonempty disjoint submasks") {

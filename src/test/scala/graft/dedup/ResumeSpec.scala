@@ -19,8 +19,8 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-resume-$tag").toString
 
-  private def assignmentsOf(workDir: String): Map[String, Long] =
-    CheckpointedDedup.run(clips, workDir, cfg).get
+  private def assignmentsOf(workDir: String, c: DedupConfig = cfg): Map[String, Long] =
+    CheckpointedDedup.run(clips, workDir, c).get
       .select("clip_id", "cluster").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -50,10 +50,12 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
 
   test("kill mid-CC (after round 0), resume reproduces assignments") {
     val dir = tmpDir("cc")
-    assert(CheckpointedDedup.run(clips, dir, cfg, stopAfter = Some("labels_round_0")).isEmpty)
+    // no driver-local CC: the kill must land between distributed rounds
+    val distributed = cfg.copy(ccLocalMaxEdges = 0)
+    assert(CheckpointedDedup.run(clips, dir, distributed, stopAfter = Some("labels_round_0")).isEmpty)
     val snap = SnapshotLog.latestStage(s"$dir/labels")
     assert(snap.exists(_.stage == "labels_round_0"))
-    assert(assignmentsOf(dir) == uninterrupted)
+    assert(assignmentsOf(dir, distributed) == uninterrupted)
     // converged marker present after resume
     assert(SnapshotLog.latestStage(s"$dir/labels").exists(_.stage == "labels_converged"))
   }
@@ -69,6 +71,10 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(metrics.contains("\"stage\":\"features\""))
     assert(metrics.contains("\"stage\":\"labels_converged\""))
     assert(metrics.contains("\"stage\":\"assignments\""))
+    // the default config's small edge graph takes the driver-local CC:
+    // exactly one labels version, the converged one
+    val labels = SnapshotLog.latestStage(s"$dir/labels").get
+    assert(labels.version == 0 && labels.stage == "labels_converged")
   }
 
   test("second run over a completed workDir is a pure read (no recompute)") {
