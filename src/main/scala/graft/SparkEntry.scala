@@ -25,13 +25,13 @@ object SparkEntry {
   /** Drain a bounded streaming query (AvailableNow) with stream-sized state
     * parallelism and a tmpfs-backed checkpoint.
     *
-    * - State-store partitions are clamped (default 8, `-Dgraft.
-    *   streamShufflePartitions`): the state op's task count should track
-    *   the STATE size (a few thousand keys here), not the session's core
-    *   count — at 32 partitions each micro-batch paid 32 state-store
-    *   open/commit round-trips of which ~4/5 held no state (measured on
-    *   s02: stage run 13.0s vs cpu 1.2s, nearly all state-commit I/O
-    *   wait). Production sizing scales this with keyspace, not cores.
+    * - State-store partitions are fixed at 8: the state op's task count
+    *   should track the STATE size (a few thousand keys here), not the
+    *   session's core count — at 32 partitions each micro-batch paid 32
+    *   state-store open/commit round-trips of which ~4/5 held no state
+    *   (measured on s02: stage run 13.0s vs cpu 1.2s, nearly all
+    *   state-commit I/O wait). Production sizing scales this with keyspace,
+    *   not cores.
     * - The checkpoint lives under /dev/shm (fresh random dir per
     *   invocation, deleted after the drain): the HDFS-backed state store
     *   fsyncs delta files per partition per batch, which on /tmp is disk
@@ -47,7 +47,7 @@ object SparkEntry {
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
         System.getProperty("java.io.tmpdir"))
     val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, s"graft-$sink-ckpt")
-    try withConf(s, ShufflePartitions -> sys.props.getOrElse("graft.streamShufflePartitions", "8")) {
+    try withConf(s, ShufflePartitions -> "8") {
       val q = df.writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt.toString)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
@@ -60,6 +60,23 @@ object SparkEntry {
       catch { case _: Throwable => () }
     }
   }
+
+  /** Eagerly materialize `df` with its lineage cut, for a subtree that more
+    * than one consumer reads — chiefly the range exchange of a following
+    * global sort, whose boundary-sampling pass runs its child in a separate
+    * job and would otherwise re-run the whole subtree.
+    *
+    * - `localCheckpoint`, not `persist`: the blocks are keyed by the new
+    *   RDD's identity, so one invocation's result is never reused by the
+    *   next invocation of the same query builder (no cross-run result
+    *   caching); the materialization itself runs inside the timed window.
+    * - Assumes local mode (ADVICE r6 #2): the blocks are executor-local and
+    *   unreplicated, so on a cluster a lost executor fails the query
+    *   instead of recomputing it.
+    * - Released by Spark's ContextCleaner once the returned frame is
+    *   dropped (ADVICE r6 #1): a builder returns an unexecuted frame, so it
+    *   cannot release after its caller's action. */
+  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Flagship: the near-dup clustering pipeline on a 500-clip deterministic
     * corpus (driver smoke-checks rows > 0). */
@@ -289,14 +306,11 @@ object SparkEntry {
       // tokenize ONCE: the token arrays feed four consumers (the df table,
       // the prefix join's stream side, and both verify lookups) — without a
       // pin each consumer re-ran the split/lower/distinct pass over every
-      // document. localCheckpoint (not persist) on purpose: it caches by
-      // RDD identity, so a later invocation of this query builder gets a
-      // fresh computation — no cross-run result caching; the eager
-      // materialization itself runs inside the timed window.
+      // document
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           array_distinct(split(lower(col("text")), " ")).as("toks"))
-        .localCheckpoint(true)
+        .transform(pin)
       val exploded = docs.select(col("doc_id"), col("lang"),
         size(col("toks")).as("ntok"), explode(col("toks")).as("tok"))
       val dfTab = exploded.groupBy(col("lang"), col("tok"))
@@ -331,13 +345,10 @@ object SparkEntry {
         .where(col("inter") >= T)
         .select(col("a_id"), col("b_id"), col("inter"),
           (size(col("a_toks")) + size(col("b_toks")) - col("inter")).as("uni"))
-        // pin the verified pairs before the global sort: the range
-        // exchange's boundary-sampling pass executes its child in a
-        // separate job, so without the pin the whole candidate+verify
-        // chain (the query's dominant cost) runs TWICE per invocation.
-        // localCheckpoint, not persist, for the same cross-run-safety
-        // reason as the tokenize pin above.
-        .localCheckpoint(true)
+        // pin the verified pairs before the global sort: without it the
+        // whole candidate+verify chain (the query's dominant cost) runs
+        // TWICE per invocation
+        .transform(pin)
         .orderBy(col("a_id"), col("b_id"))
     }),
     "d03_minhash_clusters" -> ((s, d) => {
@@ -356,7 +367,7 @@ object SparkEntry {
       t(s, d, "documents")
         .select(col("doc_id"), lang_id(col("text")).as("pred_lang"))
         // pin before the sort (range-sampling would re-run the text scan)
-        .localCheckpoint(true)
+        .transform(pin)
         .orderBy(col("doc_id"))
     }),
     "d05_token_stats" -> ((s, d) => {
@@ -366,10 +377,9 @@ object SparkEntry {
           size(split(norm, " ")).as("n_tokens"),
           regexp_count(norm, lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).as("n_bpe_tokens"),
           length(norm).as("n_chars_norm"))
-        // pin the narrow computed rows before the sort: the range
-        // exchange's sampling job re-executes its child, which here is
-        // the full text scan + the regex projection (the whole query)
-        .localCheckpoint(true)
+        // pin the narrow computed rows before the sort (range-sampling
+        // would re-run the text scan + regex projection, the whole query)
+        .transform(pin)
         .orderBy(col("doc_id"))
     }),
     "q14_distinct" -> ((s, d) => {
@@ -386,7 +396,7 @@ object SparkEntry {
           lang_id(col("text")).as("pred_lang"))
         .where(col("q") >= 0.5)
         // pin before the sort (range-sampling would re-run scan + scoring)
-        .localCheckpoint(true)
+        .transform(pin)
         .orderBy(col("doc_id"))
     }),
     "d07_fingerprint_groups" -> ((s, d) => {
@@ -477,9 +487,9 @@ object SparkEntry {
         .withColumn("sim_r3", round(cosine_sim(col("a_emb"), col("b_emb")), 3))
         .where(col("sim_r3") >= 0.45)
         .select(col("a_id"), col("b_id"), col("sim_r3"))
-        // pin before the sort: the range exchange's sampling job would
-        // otherwise re-execute the whole cosine cross-join a second time
-        .localCheckpoint(true)
+        // pin before the sort (range-sampling would re-run the whole
+        // cosine cross-join)
+        .transform(pin)
         .orderBy(col("a_id"), col("b_id"))
     }),
     "q15_cube" -> ((s, d) => {

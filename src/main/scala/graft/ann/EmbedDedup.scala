@@ -57,20 +57,19 @@ object EmbedDedup {
   private def clustersInner(vectors: DataFrame, threshold: Double,
                             planesPerTable: Int, tables: Int, seed: Long,
                             cfg: DedupConfig): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
     val sigCols = (0 until tables).map(t =>
       hyperplane_sig(col("embedding"), planesPerTable, seed + t))
     val sigs = vectors.select(col("vec_id"),
       posexplode(array(sigCols: _*)).as(Seq("table", "bucket")))
-    // one packed 64-bit bucket key per (table, sig): tables stay disjoint up
-    // to a 64-bit coincidence, and a coincidence can only ADD candidates —
-    // every pair is exactly verified below (same argument as the text
-    // lanes' lane-salted keyspace, DedupPipeline.candidates)
+    // one packed 64-bit bucket key per (table, sig), lane index 0 in the
+    // low 2 bits: tables stay disjoint up to a 62-bit coincidence, and a
+    // coincidence can only ADD candidates — every pair is exactly verified
+    // below (same argument as the text lanes' lane-salted keyspace,
+    // DedupPipeline.candidates)
     val buckets = sigs.select(
-      murmur3_pair(col("bucket"), col("table").cast("long")).as("key"),
-      col("vec_id").as("id"), lit(1).as("lane")).as[CandidatePairs.Bucket]
-    val cand = CandidatePairs.pairs(buckets, cfg)
+      shiftleft(murmur3_pair(col("bucket"), col("table").cast("long")), 2).as("bkey"),
+      col("vec_id").as("id"))
+    val cand = CandidatePairs.pairsPacked(buckets, cfg)
 
     val embA = vectors.select(col("vec_id").as("a"), col("embedding").as("a_emb"))
     val embB = vectors.select(col("vec_id").as("b"), col("embedding").as("b_emb"))

@@ -13,7 +13,10 @@ import graft.text.TextFeatures
   */
 object BruteForceOracle {
 
-  /** Union-find with path compression. */
+  /** Union-find with path compression and min-index roots, shared by the
+    * reference code (this oracle, [[graft.OracleDump]]) and the test
+    * helpers. [[ConnectedComponents.runLocal]] keeps its own copy so the
+    * product and its reference stay independent. */
   final class UnionFind(n: Int) {
     private val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {

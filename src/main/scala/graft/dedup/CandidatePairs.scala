@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.core.DedupConfig
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bucket → candidate-pair expansion with explicit skew handling.
@@ -27,11 +27,12 @@ object CandidatePairs {
   /** Salt-group count bounds for hot keys. */
   final val MaxSalts = 1024
 
-  /** Overflow-degrade visibility (ADVICE r4): past `runBufferCap` a bucket
-    * run drains through the bounded-memory windowed path and the advertised
-    * "candidate recall COMPLETE below runBufferCap" property stops holding
-    * for that run — the repo's no-silent-caps discipline requires that loss
-    * to be machine-visible, not oral history. One named accumulator per
+  /** Overflow-degrade visibility (ADVICE r4): past the run buffer
+    * ([[runBufferOf]]) a bucket run drains through the bounded-memory
+    * windowed path and the advertised "candidate recall COMPLETE below the
+    * run buffer" property stops holding for that run — the repo's
+    * no-silent-caps discipline requires that loss to be machine-visible,
+    * not oral history. One named accumulator per
     * SparkContext counts overflowed runs across all pair-gen jobs; Bench and
     * Verify surface the value in their artifacts (expected 0 at every tested
     * scale — a single bucket needs ~10^5 members to trip it). */
@@ -42,8 +43,6 @@ object CandidatePairs {
     overflowAccs.computeIfAbsent(sc, c => c.longAccumulator("graft.pairs.overflowRuns"))
   /** Total overflowed runs observed on the session's context so far. */
   def overflowRuns(spark: SparkSession): Long = overflowAcc(spark.sparkContext).value
-
-  final case class Bucket(key: Long, id: Long, lane: Int)
 
   /** Stitch the salt groups of one split hot bucket: every group minimum
     * pairs with the smallest minimum (a STAR, not a path). Same candidate
@@ -88,15 +87,14 @@ object CandidatePairs {
     pairsIt ++ starChain(reps, lane)
   }
 
-  /** Ids buffered per bucket run before [[overflowRun]] takes over. Clamp
-    * (ADVICE r2): the drain pins salts = MaxSalts, which is exact only when
-    * every overflow run has >= cap*MaxSalts members — so the buffer must
-    * hold at least that many regardless of how callers tune cap (Bench's
-    * graft.cap knob) or runBufferCap. At the default config cap*MaxSalts ==
-    * runBufferCap == 65536. */
+  /** Ids buffered per bucket run before [[overflowRun]] takes over:
+    * cap*MaxSalts (65536 at the default config), the least buffer for which
+    * the drain's pinned salts = MaxSalts is exact (ADVICE r2) — every run
+    * that overflows it has a saturated saltCount, so the emitted pairs stay
+    * a pure function of the data at ANY run length, however callers tune
+    * cap (Bench's graft.cap knob). */
   private def runBufferOf(cfg: DedupConfig): Int =
-    math.min(Int.MaxValue.toLong,
-      math.max(cfg.maxBucketSize.toLong * MaxSalts, cfg.runBufferCap.toLong)).toInt
+    math.min(Int.MaxValue.toLong, cfg.maxBucketSize.toLong * MaxSalts).toInt
 
   /** Bounded-memory drain of a bucket run longer than the run buffer, shared
     * by [[pairsPacked]] and [[pairsHamming]]: the ids are `prefix(0 until
@@ -172,29 +170,19 @@ object CandidatePairs {
     }
   }
 
-  /** Full skew-aware pair generation. Output (a, b, lane, fps_hits):
-    * unordered unique pairs with the OR of the lane bits that produced them
-    * — verification then evaluates only the predicate clause(s) whose lane
-    * emitted a pair (a jaccard check is pointless for a pair only the
-    * SimHash-block lane produced, and vice versa). Bucket rows travel as
-    * packed (bkey, id) 2-long rows — lane index in the low 2 bits of the
-    * 64-bit key — through [[pairsPacked]]'s single exchange. */
-  def pairs(buckets: Dataset[Bucket], cfg: DedupConfig = DedupConfig.default): DataFrame = {
-    import buckets.sparkSession.implicits._
-    // lane bit -> 2-bit index packed into the key's low bits (keyspaces are
-    // already lane-disjoint via the per-lane xor salt; the 2 bits lost to
-    // the shift are hash bits — a cross-bucket collision merges two buckets,
-    // which can only ADD candidates, all exactly verified downstream)
-    val laneIdx = when($"lane" === lit(1), lit(0L))
-      .when($"lane" === lit(2), lit(1L)).otherwise(lit(2L))
-    pairsPacked(buckets.toDF()
-      .select(shiftleft($"key", 2).bitwiseOR(laneIdx).as("bkey"), $"id"), cfg)
-  }
-
-  /** [[pairs]] over an already-packed (bkey, id) bucket table — the
-    * production entry ([[DedupPipeline.candidates]] emits packed rows in
-    * its single pass over the features cache). ONE exchange for the whole
-    * pair generation.
+  /** Full skew-aware pair generation over packed (bkey, id) bucket rows.
+    * Output (a, b, lane, fps_hits): unordered unique pairs with the OR of
+    * the lane bits that produced them — verification then evaluates only
+    * the predicate clause(s) whose lane emitted a pair (a jaccard check is
+    * pointless for a pair only the SimHash-block lane produced, and vice
+    * versa). `bkey` is the bucket key shifted left by 2 with the lane index
+    * (0, 1, 2 for lane bits 1, 2, 4) in the low 2 bits: keyspaces are
+    * already lane-disjoint via the per-lane xor salt, and the 2 bits lost to
+    * the shift are hash bits — a cross-bucket collision merges two buckets,
+    * which can only ADD candidates, all exactly verified downstream.
+    * [[DedupPipeline.candidates]] emits packed rows in its single pass over
+    * the features cache; [[graft.ann.EmbedDedup]] emits lane-0 rows. ONE
+    * exchange for the whole pair generation.
     *
     * `repartition(bkey) + sortWithinPartitions(bkey, id)` makes every
     * bucket a contiguous sorted run inside exactly one partition; a single
@@ -360,7 +348,7 @@ object CandidatePairs {
     * single-exchange layout (repartition + sortWithinPartitions, 3-long
     * rows, complete runs streamed per partition); over-cap runs recurse via
     * [[expandHamming]] instead of windowing, so candidate recall for the
-    * Hamming budget is COMPLETE at any bucket size below `runBufferCap`
+    * Hamming budget is COMPLETE at any bucket size below the run buffer
     * (beyond it the packed path's bounded-memory [[overflowRun]] applies —
     * a ~10^5-member single bucket, the documented boundary).
     *

@@ -2,6 +2,7 @@ package graft.ann
 
 import graft.SparkTest
 import graft.corpus.EmbedGen
+import graft.dedup.BruteForceOracle
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EmbedDedup vs an in-test O(n^2) exact-cosine + union-find oracle on the
@@ -32,21 +33,15 @@ class EmbedDedupSpec extends AnyFunSuite with SparkTest {
       .select("vec_id", "embedding")
 
     val rows = vecs.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val root = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (root(r) != r) { root(r) = root(root(r)); r = root(r) }
-      r
-    }
+    val uf = new BruteForceOracle.UnionFind(n)
     var edges = 0
     for (i <- 0 until n; j <- i + 1 until n
          if cosF(rows(i)._2, rows(j)._2) >= threshold) {
       edges += 1
-      val (ri, rj) = (find(i), find(j))
-      if (ri != rj) root(math.max(ri, rj)) = math.min(ri, rj)
+      uf.union(i, j)
     }
     assert(edges > 100, s"fixture degenerate: only $edges oracle edges")
-    val members = (0 until n).groupBy(find)
+    val members = (0 until n).groupBy(uf.find)
     val expected = members.values.flatMap { idxs =>
       val lbl = idxs.map(i => rows(i)._1).min
       idxs.map(i => (rows(i)._1, lbl, rows(i)._1 == lbl))

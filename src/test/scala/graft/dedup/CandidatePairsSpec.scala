@@ -23,15 +23,14 @@ class CandidatePairsSpec extends AnyFunSuite with SparkTest {
   /** connectivity of one bucket's emitted pairs via union-find */
   private def connected(ids: Seq[Long], pairs: Set[(Long, Long)]): Boolean = {
     val idx = ids.zipWithIndex.toMap
-    val parent = Array.tabulate(ids.length)(identity)
-    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    val uf = new BruteForceOracle.UnionFind(ids.length)
     pairs.foreach { case (a, b) =>
       (idx.get(a), idx.get(b)) match {
-        case (Some(i), Some(j)) => parent(find(i)) = find(j)
+        case (Some(i), Some(j)) => uf.union(i, j)
         case _ =>
       }
     }
-    ids.indices.map(find).distinct.size == 1
+    ids.indices.map(uf.find).distinct.size == 1
   }
 
   test("singleton buckets emit nothing; small buckets emit all-pairs") {
@@ -64,8 +63,8 @@ class CandidatePairsSpec extends AnyFunSuite with SparkTest {
   }
 
   test("overflow path (run > runBufferCap): bounded memory, still connected, deterministic") {
-    // the run buffer is clamped to >= maxBucketSize * MaxSalts = 1024 ids
-    val small = cfg.copy(maxBucketSize = 1, runBufferCap = 64)
+    // the run buffer is maxBucketSize * MaxSalts = 1024 ids
+    val small = cfg.copy(maxBucketSize = 1)
     val ids = (0L until 1500L).map(_ * 3L + 2L)
     val rows = ids.map(id => (20L, id)) ++ Seq((24L, 5L), (24L, 6L))
     val o1 = CandidatePairs.pairsPacked(packed(rows, 3), small)

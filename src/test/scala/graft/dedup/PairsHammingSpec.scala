@@ -42,13 +42,9 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
   /** True when `pairs` connect every id of `ids` (union-find). */
   private def connected(ids: Seq[Long], pairs: Set[(Long, Long)]): Boolean = {
     val idx = ids.zipWithIndex.toMap
-    val root = Array.tabulate(ids.length)(identity)
-    def find(x: Int): Int = { var r = x; while (root(r) != r) { root(r) = root(root(r)); r = root(r) }; r }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(idx(a)), find(idx(b)))
-      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    ids.indices.map(find).distinct.size == 1
+    val uf = new BruteForceOracle.UnionFind(ids.length)
+    pairs.foreach { case (a, b) => uf.union(idx(a), idx(b)) }
+    ids.indices.map(uf.find).distinct.size == 1
   }
 
   test("recall is complete under a tiny cap on a sparse, zero-block-heavy corpus") {
@@ -114,8 +110,8 @@ class PairsHammingSpec extends AnyFunSuite with SparkTest {
 
   test("a run longer than the run buffer drains bounded: counted, partition-independent, connected") {
     import spark.implicits._
-    // maxBucketSize = 1 clamps the run buffer to MaxSalts = 1024 ids
-    val cfg = DedupConfig.default.copy(maxBucketSize = 1, runBufferCap = 64)
+    // the run buffer is maxBucketSize * MaxSalts = 1024 ids
+    val cfg = DedupConfig.default.copy(maxBucketSize = 1)
     val ids = (0L until 1500L).map(_ * 2654435761L + 11L)
     val rows = ids.map(id => (8L << 2, id, id & fullMask)).toDF("bkey", "id", "fp")
     def pairs(parts: Int): Set[(Long, Long)] =
